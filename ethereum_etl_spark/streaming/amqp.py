@@ -20,10 +20,11 @@ micro-batch DataFrame). Each micro-batch:
    reference's rule (``number`` for block items, ``block_number``
    otherwise, cli/amqp_stream.py:120-125);
 3. the span is re-read FROM THE WAL (the node analog) and replayed through
-   ``ChainStreamer._apply_batch`` — the ``export_all`` re-export. The MERGE
-   path is idempotent per (key, seq), so at-least-once delivery (redelivered
-   messages, checkpoint replay after a crash) converges exactly-once — the
-   same guarantee the reference gets from ack-after-process + ReplacingMergeTree.
+   ``ChainStreamer._prepare`` + ``_apply_batch`` — the ``export_all``
+   re-export. The MERGE path is idempotent per (key, seq), so at-least-once
+   delivery (redelivered messages, checkpoint replay after a crash)
+   converges exactly-once — the same guarantee the reference gets from
+   ack-after-process + ReplacingMergeTree.
 
 Spark's streaming checkpoint owns source offsets (the ack analog):
 a crashed batch is redelivered in full on restart.
@@ -115,7 +116,9 @@ def run_amqp_reingest(
                 # span from source truth; the idempotent MERGE absorbs
                 # redelivery.
                 chunk = wal.filter(F.col("block_number").between(lo, hi))
-                streamer._apply_batch(chunk, f"amqp-{batch_id}-{lo}-{hi}")
+                streamer._apply_batch(
+                    streamer._prepare(chunk), f"amqp-{batch_id}-{lo}-{hi}"
+                )
             streamer.lineage.record(
                 batch_id=f"amqp-{batch_id}",
                 source="amqp",

@@ -100,26 +100,70 @@ CANDLE_BUCKETS = {
     "1d": ("1 day", 86_400),
 }
 
+# table → the tables whose commit its merge waits for. Derived full_touch
+# tables don't wait for ALL of phase 1 — only for their specific upstream
+# commit (candles need the committed transfers table; latest-balance
+# projections need the cached balance plan materialized by their history
+# merge, which also guards the carry-file GC race). Head tables
+# (latest-state projections) merge AFTER every consumer of their PRE-batch
+# state: the balance heads feed the v3 reserve as-of and the mark head feeds
+# trade pricing — both inside the shared _raw_trades/_trades build — so
+# those heads wait for price_marks/dex_trades. On crash replay the recompute
+# then reads the same pre-batch head the first attempt saw, and the
+# already-committed downstream merges no-op on batch_id. Deps naming tables
+# absent from a batch are skipped.
+_MERGE_DEPS = {
+    **{f"candles_{b}": ["token_transfers"] for b in CANDLE_BUCKETS},
+    "token_balances_latest": [
+        "token_balances", "price_marks", "dex_trades", "liquidity_events",
+    ],
+    "native_balances_latest": ["native_balances"],
+    "price_marks": ["dex_pools", "tokens"],
+    "dex_trades": ["dex_pools", "tokens"],
+    "price_marks_latest": ["price_marks", "dex_trades", "liquidity_events"],
+    "liquidity_events": ["dex_pools", "tokens"],
+}
 
-def _cluster_batch(batch: DataFrame) -> DataFrame:
-    """Cluster the raw batch by entity_type WITHIN each scan partition (no
-    shuffle) before caching. The cached columnar batches then hold one
-    entity each, so the per-batch min/max stats let every decode's
-    ``entity_type == e`` filter SKIP foreign batches (in-memory partition
-    pruning) instead of re-reading the whole mixed cache — ~8 full-cache
-    scans per cycle (one per decoded entity), each dragging every other
-    entity's payload bytes across the memory bus. Measured on the whole-WAL
-    replay: ~93 GB of cache/input reads per 7.9M-event batch, and the
-    resulting bus contention was the dominant 2→8-core scaling loss (run
-    core-seconds inflated +57% at 8 cores, cores 90% busy)."""
-    out = batch.sortWithinPartitions("entity_type", "block_number")
-    out._ees_clustered = True
-    return out
+
+def _run_merges(derived: dict, merge_one) -> None:
+    """The merge scheduler: every entity MERGE of a batch on its own pool
+    thread, so the Spark scheduler interleaves their stages (the
+    reference's thread-pool job parallelism, batch_work_executor.py, done
+    the Spark way). Submission follows one topological order of
+    _MERGE_DEPS, so each merge's upstream futures exist when it is
+    submitted (token_balances_latest's dep on dex_trades points at a table
+    added later in _derive — dict order would miss that wait)."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    order: list[str] = []
+
+    def visit(n):
+        if n not in order:
+            for dep in _MERGE_DEPS.get(n, []):
+                if dep in derived:
+                    visit(dep)
+            order.append(n)
+
+    for n in derived:
+        visit(n)
+
+    def after(deps, name):
+        for d in deps:
+            d.result()  # wait for the upstream commit
+        merge_one(name, derived[name])
+
+    futures: dict = {}
+    with ThreadPoolExecutor(max_workers=max(len(order), 1)) as ex:
+        for n in order:
+            deps = [futures[d] for d in _MERGE_DEPS.get(n, []) if d in futures]
+            futures[n] = ex.submit(after, deps, n)
+    for f in futures.values():
+        f.result()  # propagate failures
 
 
-def _stage_batch(spark, batch: DataFrame, path: str) -> DataFrame | None:
-    """Spill a LARGE batch to entity-partitioned compressed parquet and read
-    it back, instead of caching the mixed frame in-heap.
+def _stage_batch(batch: DataFrame, path: str) -> bool:
+    """Spill a LARGE batch to entity-partitioned compressed parquet, instead
+    of caching the mixed frame in-heap.
 
     Why: the in-heap columnar cache stores the ~uncompressed payload bytes,
     and although the per-entity decode filters are pushed into the
@@ -134,8 +178,8 @@ def _stage_batch(spark, batch: DataFrame, path: str) -> DataFrame | None:
     cluster this is the per-executor spill shape; in the streamer the write
     rides the prefetch thread, off the merge critical path.
 
-    Returns None when the batch turned out empty (caller falls back to the
-    empty-cache path)."""
+    Returns False (and leaves no directory) when the batch turned out
+    empty — the caller then falls back to the cache path."""
     (
         batch.sortWithinPartitions("entity_type", "block_number")
         .write.partitionBy("entity_type")
@@ -144,11 +188,8 @@ def _stage_batch(spark, batch: DataFrame, path: str) -> DataFrame | None:
     )
     if not any(d.startswith("entity_type=") for d in os.listdir(path)):
         shutil.rmtree(path, ignore_errors=True)  # empty range — no spill
-        return None
-    staged = spark.read.parquet(path)
-    staged._ees_clustered = True
-    staged._ees_staged = path
-    return staged
+        return False
+    return True
 
 
 @dataclass
@@ -159,7 +200,6 @@ class StreamerConfig:
     entity_types: tuple[str, ...] = DEFAULT_ENTITIES
     partition_size: int = 100_000  # block numbers per lake partition
     strict_counts: bool = False
-    parallel_merges: bool = True
     collect_errors: bool = False  # dead-letter malformed payloads → errors table
     # §1.4 query-pattern projections (logs_address / transactions_address
     # MVs, schema.sql:1099-1533): same rows re-keyed for point lookups by
@@ -180,7 +220,6 @@ class StreamerConfig:
     # additive schema evolution: entity → extra StructFields appearing in
     # late payloads (SURVEY §1.3; LakeTable widens the table on first sight)
     extra_entity_fields: dict = field(default_factory=dict)
-    extra_merge_opts: dict = field(default_factory=dict)
     # J7 in the loop (enrich_dex_trades_job.py:38-108): when set, dex_trades
     # are persisted ENRICHED — prices_stable/amount_stable from an
     # accumulating price_marks table (as-of, replay-deterministic) and
@@ -204,17 +243,6 @@ class StreamerConfig:
     # so fork pools are labeled at DISCOVERY time and trade attribution
     # inherits the namespace from the pool dimension.
     factory_amm: dict = field(default_factory=dict)
-
-
-# which raw entities each derived/enriched entity needs —
-# EXPORT_DEPENDENCIES analog (eth_streamer_adapter.py:122-147)
-DEPENDENCIES: dict[str, set[str]] = {
-    "block": set(),
-    "transaction": {"receipt"},  # enrich j2
-    "receipt": set(),
-    "log": {"block"},
-    "token_transfer": {"log", "block"},
-}
 
 
 def _enriched_tx_schema():
@@ -254,25 +282,76 @@ class ChainStreamer:
         shutil.rmtree(f"{cfg.warehouse}/_staging", ignore_errors=True)
         self._init_tables()
 
-    def _prepare_batch(self, batch: DataFrame, lo: int, hi: int) -> DataFrame:
-        """Cache a small batch in-heap; SPILL a large one to
-        entity-partitioned parquet (_stage_batch) so the per-entity decodes
-        read only their own files instead of re-traversing the mixed cache.
-        lo/hi are WAL seq units (16 per block)."""
-        if (hi - lo) // 16 >= self.cfg.stage_min_blocks:
+    # ---------- batch lifecycle: _prepare → _apply_batch → _release ----------
+
+    def _prepare(
+        self,
+        raw: DataFrame,
+        lo: int | None = None,
+        hi: int | None = None,
+        ahead: bool = False,
+    ) -> dict:
+        """Make the batch handle for the raw WAL rows in (lo, hi] — the one
+        object that owns the batch until _release frees it:
+
+          lo, hi   WAL seq range (16 seq units per block); None for a raw
+                   frame with no known range (repair, streaming front-ends)
+          df       the prepared batch frame
+          staged   its parquet spill directory, or None when it is cached
+          srows    the stats pass (_batch_stats), or None until
+                   _apply_batch runs it
+          parsed   the pre-built parsed/marked log checkpoints, or None
+          frames   per-batch cached decodes and derived frames
+
+        A range spanning at least ``stage_min_blocks`` blocks is SPILLED to
+        entity-partitioned parquet (_stage_batch). Anything else is
+        clustered by entity_type WITHIN each scan partition (no shuffle) and
+        cached in-heap: the cached columnar batches then hold one entity
+        each, so every decode's ``entity_type == e`` filter SKIPS foreign
+        batches by their min/max stats instead of re-reading the whole mixed
+        cache (measured on the whole-WAL replay: ~93 GB of cache reads per
+        7.9M-event batch, the dominant 2→8-core scaling loss).
+
+        ``ahead``: also run the stats pass and the parse pre-build now — the
+        prefetch thread, overlapped with the previous batch's merges. The
+        parse is the root of the dex critical chain (parsed → dims → trades
+        → pricing → owner); building it in-loop serialized ~6 s per batch
+        behind the merge phase (r6 event-log profile)."""
+        batch = {
+            "lo": lo, "hi": hi, "staged": None, "srows": None, "parsed": None,
+            "frames": [],
+        }
+        if hi is not None and (hi - lo) // 16 >= self.cfg.stage_min_blocks:
             path = f"{self.cfg.warehouse}/_staging/{lo}-{hi}"
-            staged = _stage_batch(self.spark, batch, path)
-            if staged is not None:
-                return staged
-        return _cluster_batch(batch).cache()
+            if _stage_batch(raw, path):
+                batch.update(df=self.spark.read.parquet(path), staged=path)
+        if batch["staged"] is None:
+            batch["df"] = raw.sortWithinPartitions("entity_type", "block_number").cache()
+        if ahead:
+            batch["srows"] = self._batch_stats(batch["df"])
+            try:
+                batch["parsed"] = self._prebuild_parsed(batch["df"], batch["srows"])
+            except Exception:  # noqa: BLE001 — fall back to the in-loop build
+                pass
+        return batch
 
     @staticmethod
-    def _discard_batch(df: DataFrame) -> None:
-        path = getattr(df, "_ees_staged", None)
-        if path is not None:
-            shutil.rmtree(path, ignore_errors=True)
+    def _release(batch: dict | None) -> None:
+        """Free everything a batch handle owns: the cached or staged batch,
+        its per-batch cached frames and the pre-built parse checkpoints."""
+        if batch is None:
+            return
+        if batch["staged"] is not None:
+            shutil.rmtree(batch["staged"], ignore_errors=True)
         else:
+            batch["df"].unpersist()
+        for df in batch["frames"]:
             df.unpersist()
+        for df in (batch["parsed"] or {}).values():
+            if df is not None:
+                # an eager localCheckpoint keeps its blocks on its leaf RDD,
+                # which DataFrame.unpersist (the CacheManager) never sees
+                df._jdf.queryExecution().logical().rdd().unpersist(False)
 
     def _prefetch_next(self, tailer: WalTailer, after_target: int) -> None:
         from concurrent.futures import ThreadPoolExecutor
@@ -286,21 +365,9 @@ class ChainStreamer:
             nt = tailer.compute_target(after_target)
             if nt is None:
                 return None
-            df = self._prepare_batch(
-                tailer.read_range(after_target, nt), after_target, nt
+            return self._prepare(
+                tailer.read_range(after_target, nt), after_target, nt, ahead=True
             )
-            srows = self._batch_stats(df)
-            pre = {"lo": after_target, "hi": nt, "df": df, "srows": srows}
-            # pre-build the parsed-log checkpoint for the predicted batch on
-            # this thread, overlapping the CURRENT batch's merges: the parse
-            # is the root of the dex critical chain (parsed → dims → trades
-            # → pricing → owner), and building it in-loop serialized ~6 s
-            # per batch behind the merge phase (r6 event-log profile)
-            try:
-                pre["parsed"] = self._prebuild_parsed(df, srows)
-            except Exception:  # noqa: BLE001 — fall back to the in-loop build
-                pre["parsed"] = None
-            return pre
 
         self._prefetch = self._prefetch_pool.submit(task)
 
@@ -357,16 +424,13 @@ class ChainStreamer:
             )
         return {"parsed": parsed, "marked": marked}
 
-    def _take_prefetch(self, watermark: int):
-        """Consume a matching prefetch; discard (and unpersist) a stale one."""
+    def _take_prefetch(self, watermark: int) -> dict | None:
+        """The prefetched batch if it starts at ``watermark``; a stale one
+        is released."""
         pf, self._prefetch = self._prefetch, None
-        if pf is None:
-            return None
-        pre = pf.result()
-        if pre is None:
-            return None
-        if pre["lo"] != watermark:
-            self._discard_batch(pre["df"])
+        pre = pf.result() if pf is not None else None
+        if pre is not None and pre["lo"] != watermark:
+            self._release(pre)
             return None
         return pre
 
@@ -523,41 +587,42 @@ class ChainStreamer:
 
     # ---------- one sync cycle ----------
 
-    def _decode_batch(self, batch: DataFrame, ops=("upsert", "reorg")):
-        """Decode raw entities once, cached — the memoized thunk DAG."""
-        cache = {}
-
+    def _decode_batch(self, df: DataFrame, frames: list):
+        """Decode raw entities once, cached — the memoized thunk DAG. Each
+        cached decode joins ``frames`` (the batch handle's, see _release)."""
         from ethereum_etl_spark.sources.decode import drop_null_keys
 
         views = {}
 
         def get(entity):
-            if entity not in cache:
-                cache[entity] = decode_entity(
-                    batch,
+            if entity not in views:
+                decoded = decode_entity(
+                    df,
                     entity,
-                    ops=ops,
+                    ops=("upsert", "reorg"),
                     extra_fields=self.cfg.extra_entity_fields.get(entity),
                     uint256_sidecar=self.cfg.uint256_sidecar,
                 ).cache()
+                frames.append(decoded)
                 # null-key guard sits ABOVE the cache boundary so the JSON
                 # parse runs exactly once (see drop_null_keys docstring)
-                views[entity] = drop_null_keys(cache[entity], entity)
+                views[entity] = drop_null_keys(decoded, entity)
             return views[entity]
 
-        return get, cache
+        return get
 
     def _derive(
         self,
         get,
-        aux_cache: list | None = None,
+        frames: list,
         present_t0s: set | None = None,
         pre_parsed=None,
     ) -> dict[str, dict]:
         """Entity name → {df, merge opts} (decode + enrich + stamp).
 
         The demand-driven DAG of eth_streamer_adapter.py:184-260: parents
-        are computed once (cached), children reuse them.
+        are computed once (cached), children reuse them. Every cached
+        intermediate joins ``frames``, the batch handle's (see _release).
         """
         from ethereum_etl_spark.operators.balances import (
             native_balances_from_transactions,
@@ -594,12 +659,11 @@ class ChainStreamer:
             add("logs", stamp(logs, "log", ts_col="block_timestamp"))
         if "token_transfer" in want:
             tt = extract_token_transfers(get("log"))
+            # the ERC decode feeds BOTH the transfers merge and the balance
+            # cumsum build — cache it or the whole extract runs twice
+            # (measured ~2x the costliest non-Python stage)
             tt = enrich_with_blocks(tt, get("block")).cache()
-            if aux_cache is not None:
-                # the ERC decode feeds BOTH the transfers merge and the
-                # balance cumsum build — cache it or the whole extract runs
-                # twice (measured ~2x the costliest non-Python stage)
-                aux_cache.append(tt)
+            frames.append(tt)
             token_transfers = tt  # enriched (carries block_timestamp)
             add("token_transfers", stamp(tt, "token_transfer", ts_col="block_timestamp"))
         flat_frames = None
@@ -613,8 +677,7 @@ class ChainStreamer:
             flat_frames = flatten_geth_traces(
                 get("geth_trace"), include_internal="internal_transfer" in want
             ).cache()
-            if aux_cache is not None:
-                aux_cache.append(flat_frames)
+            frames.append(flat_frames)
         trace_frames = (
             flat_frames.drop(*INTERNAL_COLS) if flat_frames is not None else None
         )
@@ -638,8 +701,7 @@ class ChainStreamer:
             carry = self.tables["token_balances_latest"].read()
             tb = token_balances_from_transfers(token_transfers, carry_in=carry).cache()
             batch_token_balances = tb
-            if aux_cache is not None:
-                aux_cache.append(tb)  # consumed by BOTH history and latest merges
+            frames.append(tb)  # consumed by BOTH history and latest merges
             add("token_balances", stamp(tb, "token_balance"))
             from ethereum_etl_spark.operators.balances import latest_token_balances
 
@@ -660,8 +722,7 @@ class ChainStreamer:
                 carry_in=carry,
                 blocks=get("block") if "block" in want else None,
             ).cache()
-            if aux_cache is not None:
-                aux_cache.append(nb)
+            frames.append(nb)
             add("native_balances", stamp(nb, "native_balance"))
             from pyspark.sql import functions as SF
 
@@ -694,8 +755,8 @@ class ChainStreamer:
 
         def _dex_memo(key, build):
             """Thread-safe per-batch memo. The price_marks and dex_trades
-            merges run in CONCURRENT threads (parallel_merges) and both
-            demand the parsed/dims/raw-trades/marks frames; a bare dict
+            merges run in CONCURRENT threads and both demand the
+            parsed/dims/raw-trades/marks frames; a bare dict
             check-then-set races, so each thread ran the eager-checkpoint
             job independently — the duplicated combined-extract execution
             was the dominant avoidable cost of the dex critical path.
@@ -811,7 +872,7 @@ class ChainStreamer:
             )
         if "dex_trade" in want:
             # J6 trade assembly inside the CDC loop. Deferred behind the
-            # dex_pools merge (DEPS): the pools dim is then simply the
+            # dex_pools merge (_MERGE_DEPS): the pools dim is then simply the
             # COMMITTED table — it already contains pools discovered in this
             # very batch (a pool's first swap can share a batch with its
             # PairCreated), and reading post-commit avoids racing that
@@ -920,7 +981,7 @@ class ChainStreamer:
                 point-calls balanceOf(pool) per trade block,
                 uniswap_v3.py:123-132). Input = this batch's balance rows +
                 the PRE-batch latest balance per key (token_balances_latest
-                — its merge waits on dex_trades/price_marks via DEPS, so
+                — its merge waits on dex_trades/price_marks via _MERGE_DEPS, so
                 this read is the pre-batch head even on crash replay). For
                 any probe inside the batch the as-of result equals scanning
                 full history: every earlier row is dominated by its key's
@@ -1058,7 +1119,7 @@ class ChainStreamer:
                 # but not owner attribution, so it must not re-execute the
                 # owner joins). Pricing input = this batch's marks ∪ the
                 # pre-batch latest mark per token (price_marks_latest —
-                # merged AFTER this table by DEPS, so the read is the
+                # merged AFTER this table by _MERGE_DEPS, so the read is the
                 # pre-batch head even on crash replay). For every probe in
                 # this batch the as-of equals a full-history scan: all
                 # earlier marks are dominated by their token's latest. r4:
@@ -1281,53 +1342,36 @@ class ChainStreamer:
     ) -> int | None:
         t0 = time.time()
         pre = self._take_prefetch(watermark)
-        pre_srows = None
-        pre_parsed = None
         # crash-replay pinning: a persisted intent for THIS watermark means a
         # previous attempt planned (and possibly partially committed) the
         # batch — reuse its exact range so the batch_id matches and every
         # already-committed per-table merge replays as a no-op, even if the
         # WAL head advanced in between (see WatermarkStore.set_intent)
         intent = self.watermarks.get_intent()
-        pinned = intent[1] if intent is not None and intent[0] == watermark else None
-        if pinned is not None:
-            target = pinned
-            if pre is not None and pre["hi"] == target:
-                batch, pre_srows = pre["df"], pre["srows"]
-                pre_parsed = pre.get("parsed")
-            else:
-                if pre is not None:
-                    self._discard_batch(pre["df"])
-                batch = self._prepare_batch(
-                    tailer.read_range(watermark, target), watermark, target
-                )
+        pinned = intent is not None and intent[0] == watermark
+        if pinned:
+            target = intent[1]
         elif pre is not None and not allow_skip:
             # prefetched while the previous cycle merged: range + cached df
             # + stats are already in hand (a stale head only shrinks the
             # range — correct, the next cycle catches the rest)
-            target, batch, pre_srows = pre["hi"], pre["df"], pre["srows"]
-            pre_parsed = pre.get("parsed")
+            target = pre["hi"]
         else:
             target = tailer.compute_target(watermark, allow_skip=allow_skip)
-            if pre is not None and target == pre["hi"]:
-                batch, pre_srows = pre["df"], pre["srows"]
-                pre_parsed = pre.get("parsed")
-            elif pre is not None:
-                self._discard_batch(pre["df"])
-            if target is None:
-                return None
-            if pre_srows is None:
-                batch = self._prepare_batch(
-                    tailer.read_range(watermark, target), watermark, target
-                )
-        if pinned is None:
+        if pre is not None and pre["hi"] != target:
+            self._release(pre)
+            pre = None
+        if target is None:
+            return None
+        batch = pre or self._prepare(
+            tailer.read_range(watermark, target), watermark, target
+        )
+        if not pinned:
             self.watermarks.set_intent(watermark, target)
         # predict + read + stat the NEXT range while this batch processes
         self._prefetch_next(tailer, target)
         batch_id = f"{watermark}-{target}"
-        info = self._apply_batch(
-            batch, batch_id, pre_srows=pre_srows, pre_parsed=pre_parsed
-        )
+        info = self._apply_batch(batch, batch_id)
         # watermark AFTER sink commit (streamer.py:128-132)
         self.watermarks.set(target)
         self.lineage.record(
@@ -1341,29 +1385,24 @@ class ChainStreamer:
 
     def _apply_batch(
         self,
-        batch: DataFrame,
+        batch: dict,
         batch_id: str,
         force_delete_blocks: list[int] | None = None,
-        pre_srows=None,
-        pre_parsed=None,
     ) -> dict:
-        """Decode → enrich → MERGE one batch of WAL rows. Returns lineage
+        """Decode → enrich → MERGE one prepared batch (a _prepare handle),
+        then release it — on every exit, failures included. Returns lineage
         info. ``force_delete_blocks``: treat these block numbers as reorged
-        regardless of op (the verifier repair path). ``pre_srows``: batch
-        stats already computed by the prefetch thread; ``pre_parsed``: the
-        parsed-log checkpoint pre-built by the same thread (only for
-        reorg-free batches — see _prebuild_parsed)."""
+        regardless of op (the verifier repair path)."""
+        try:
+            return self._merge_batch(batch, batch_id, force_delete_blocks)
+        finally:
+            self._release(batch)
+
+    def _merge_batch(
+        self, batch: dict, batch_id: str, force_delete_blocks: list[int] | None
+    ) -> dict:
         phase_secs: dict[str, float] = {}
         __t = time.time()
-        # a staged batch (entity-partitioned parquet spill) is its own
-        # storage — no in-heap cache; `batch` is rebound below (reorg winner
-        # filter), so capture the spill path for cleanup now
-        staged_path = getattr(batch, "_ees_staged", None)
-        if not getattr(batch, "_ees_clustered", False):
-            batch = _cluster_batch(batch)
-        if staged_path is None:
-            batch = batch.cache()
-
         # ONE stats pass over the batch, grouped by entity_type: block span
         # + reorg presence + PER-ENTITY row counts. The span becomes the
         # touched-partition hint for every table MERGE (no per-table
@@ -1371,12 +1410,10 @@ class ChainStreamer:
         # SOURCE entity is absent from the batch without launching an
         # isEmpty job per table. Prefetched off the critical path when the
         # previous cycle predicted this range.
-        srows = pre_srows if pre_srows is not None else self._batch_stats(batch)
+        if batch["srows"] is None:
+            batch["srows"] = self._batch_stats(batch["df"])
+        srows = batch["srows"]
         if not srows:  # empty range
-            if staged_path is None:
-                batch.unpersist()
-            else:
-                shutil.rmtree(staged_path, ignore_errors=True)
             return {"entities": [], "reorg": False, "rows": 0}
         raw_counts = {r["entity_type"]: int(r["n"]) for r in srows}
         lo_bn = min(int(r["lo"]) for r in srows)
@@ -1386,6 +1423,7 @@ class ChainStreamer:
         phase_secs["stats"] = round(time.time() - __t, 3)
         has_reorg = n_reorg > 0 or bool(force_delete_blocks)
 
+        df = batch["df"]
         reorg_blocks: list[int] = list(force_delete_blocks or [])
         pre_keys_captured = False
         if has_reorg:
@@ -1395,7 +1433,7 @@ class ChainStreamer:
             if force_delete_blocks:
                 contested = contested | F.col("block_number").isin(force_delete_blocks)
             winners = (
-                batch.filter(contested)
+                df.filter(contested)
                 .groupBy("block_number")
                 .agg(F.max_by("block_hash", "seq").alias("__winning_hash"))
                 .collect()
@@ -1408,8 +1446,8 @@ class ChainStreamer:
                 "block_number long, __winning_hash string",
             )
             # drop in-batch rows superseded by a same-batch reorg
-            batch = (
-                batch.join(F.broadcast(wdf), on="block_number", how="left")
+            df = (
+                df.join(F.broadcast(wdf), on="block_number", how="left")
                 .filter(
                     F.col("__winning_hash").isNull()
                     | (F.col("block_hash") == F.col("__winning_hash"))
@@ -1427,16 +1465,15 @@ class ChainStreamer:
                 )
 
         __t = time.time()
-        get, cache = self._decode_batch(batch)
-        aux_cache: list = []
+        get = self._decode_batch(df, batch["frames"])
         # topic0 set extracted by the (possibly prefetched) stats pass —
         # _derive then builds pure plans, launching no executor jobs
         present_t0s = {
             t for r in srows for t in (r["t0s"] if "t0s" in r.asDict() else []) if t
         }
         derived = self._derive(
-            get, aux_cache, present_t0s=present_t0s,
-            pre_parsed=None if has_reorg else pre_parsed,
+            get, batch["frames"], present_t0s=present_t0s,
+            pre_parsed=None if has_reorg else batch["parsed"],
         )
         phase_secs["plan"] = round(time.time() - __t, 3)
         __t = time.time()
@@ -1523,92 +1560,7 @@ class ChainStreamer:
                 )
             merge_secs[name] = round(time.time() - __t0, 3)
 
-        # per-entity MERGEs are independent (separate tables) → submit
-        # concurrently; the Spark scheduler interleaves their stages (the
-        # reference's thread-pool job parallelism, batch_work_executor.py,
-        # done the Spark way). Derived full_touch tables don't wait for ALL
-        # of phase 1 — only for their specific upstream commit (candles need
-        # the committed transfers table; latest-balance projections need the
-        # cached balance plan materialized by their history merge, which also
-        # guards the carry-file GC race).
-        DEPS = {
-            **{f"candles_{b}": ["token_transfers"] for b in CANDLE_BUCKETS},
-            # head tables (latest-state projections) merge AFTER every
-            # consumer of their PRE-batch state: the balance heads feed the
-            # v3 reserve as-of and the mark head feeds trade pricing — both
-            # inside the shared _raw_trades/_trades build — so those heads
-            # wait for price_marks/dex_trades. On crash replay the recompute
-            # then reads the same pre-batch head the first attempt saw, and
-            # the already-committed downstream merges no-op on batch_id.
-            # (Deps naming tables absent from this batch are skipped.)
-            "token_balances_latest": [
-                "token_balances", "price_marks", "dex_trades", "liquidity_events",
-            ],
-            "native_balances_latest": ["native_balances"],
-            "price_marks": ["dex_pools", "tokens"],
-            "dex_trades": ["dex_pools", "tokens"],
-            "price_marks_latest": ["price_marks", "dex_trades", "liquidity_events"],
-            "liquidity_events": ["dex_pools", "tokens"],
-        }
-        if self.cfg.parallel_merges and len(derived) > 1:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=len(derived)) as ex:
-                futures: dict[str, object] = {}
-
-                def _submit(name, spec):
-                    deps = DEPS.get(name, [])
-
-                    def task():
-                        for dep in deps:
-                            if dep in futures:
-                                futures[dep].result()  # wait for upstream commit
-                        _merge_one(name, spec)
-
-                    futures[name] = ex.submit(task)
-
-                # topological submission: a task() only waits on deps whose
-                # futures exist when it RUNS, so every dep must be submitted
-                # before its dependents (token_balances_latest's dep on
-                # dex_trades points at a table added later in _derive —
-                # plain dict-order submission would skip that wait)
-                order: list[str] = []
-                seen: set[str] = set()
-
-                def visit(n):
-                    if n in seen:
-                        return
-                    seen.add(n)
-                    for dep in DEPS.get(n, []):
-                        if dep in derived:
-                            visit(dep)
-                    order.append(n)
-
-                for n in derived:
-                    visit(n)
-                for n in order:
-                    _submit(n, derived[n])
-                for f in futures.values():
-                    f.result()  # propagate failures
-        else:
-            # same topological discipline as the concurrent path: heads
-            # merge only after every consumer of their pre-batch state
-            ordered: list[str] = []
-            seen_s: set[str] = set()
-
-            def visit_s(n):
-                if n in seen_s:
-                    return
-                seen_s.add(n)
-                for dep in DEPS.get(n, []):
-                    if dep in derived:
-                        visit_s(dep)
-                ordered.append(n)
-
-            for n in derived:
-                visit_s(n)
-            for name in ordered:
-                _merge_one(name, derived[name])
+        _run_merges(derived, _merge_one)
         phase_secs["merges"] = round(time.time() - __t, 3)
         __t = time.time()
 
@@ -1639,7 +1591,7 @@ class ChainStreamer:
         phase_secs["reorg_fix"] = round(time.time() - __t, 3)
 
         if self.cfg.collect_errors:
-            self._append_decode_errors(batch, batch_id)
+            self._append_decode_errors(df, batch_id)
 
         # etl_delay (A5, reference etl_delay MVs schema.sql:769-799): one
         # metrics row per entity per batch — indexed_at − block timestamp of
@@ -1666,12 +1618,6 @@ class ChainStreamer:
                     "delay_s": round(indexed_at - ts, 3) if ts is not None else None,
                 }
 
-        for cdf in list(cache.values()) + aux_cache:
-            cdf.unpersist()
-        if staged_path is None:
-            batch.unpersist()
-        else:
-            shutil.rmtree(staged_path, ignore_errors=True)
         return {
             "entities": list(derived),
             "reorg": bool(has_reorg),
@@ -2260,7 +2206,7 @@ class ChainStreamer:
             return
         sub = wal.filter(F.col("block_number").isin(block_numbers))
         batch_id = "repair-" + "-".join(str(b) for b in sorted(block_numbers)[:8])
-        self._apply_batch(sub, batch_id, force_delete_blocks=block_numbers)
+        self._apply_batch(self._prepare(sub), batch_id, force_delete_blocks=block_numbers)
         self.lineage.record(batch_id=batch_id, repaired_blocks=block_numbers)
 
     def run(
@@ -2278,17 +2224,11 @@ class ChainStreamer:
         while True:
             nxt = self.sync_cycle(tailer, wm, allow_skip=allow_catchup_skip)
             if nxt is None:
-                self._drop_prefetch()
-                return wm
+                break
             wm = nxt
             cycles += 1
             if max_cycles is not None and cycles >= max_cycles:
-                self._drop_prefetch()
-                return wm
-
-    def _drop_prefetch(self) -> None:
-        pf, self._prefetch = self._prefetch, None
-        if pf is not None:
-            pre = pf.result()
-            if pre is not None:
-                self._discard_batch(pre["df"])
+                break
+        # the next range's prefetch is still in flight — wait for and free it
+        self._release(self._take_prefetch(wm))
+        return wm

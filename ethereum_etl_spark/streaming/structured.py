@@ -2,12 +2,12 @@
 
 The batch `ChainStreamer.run` is a hand-rolled micro-batch driver mirroring
 the reference's poll loop (streamer.py:90-134). This module drives the SAME
-`_apply_batch` logic from Spark Structured Streaming instead: a file-source
-readStream over the WAL directory + foreachBatch, with Spark's own
-checkpointing for source offsets (SURVEY §2.10 micro-batch trigger →
-trigger(availableNow)/processingTime). Both front-ends share the idempotent
-MERGE path, so a batch replayed by the streaming checkpoint after a crash is
-absorbed exactly-once."""
+batch lifecycle (`_prepare` → `_apply_batch`, which releases the batch) from
+Spark Structured Streaming instead: a file-source readStream over the WAL
+directory + foreachBatch, with Spark's own checkpointing for source offsets
+(SURVEY §2.10 micro-batch trigger → trigger(availableNow)/processingTime).
+Both front-ends share the idempotent MERGE path, so a batch replayed by the
+streaming checkpoint after a crash is absorbed exactly-once."""
 
 from __future__ import annotations
 
@@ -40,7 +40,7 @@ def run_structured(
     stream = reader.parquet(wal_dir)
 
     def _process(batch_df, batch_id: int) -> None:
-        streamer._apply_batch(batch_df, f"stream-{batch_id}")
+        streamer._apply_batch(streamer._prepare(batch_df), f"stream-{batch_id}")
         streamer.lineage.record(batch_id=f"stream-{batch_id}", source="structured")
 
     writer = stream.writeStream.foreachBatch(_process).option(

@@ -143,10 +143,13 @@ def test_staged_batch_spill_equivalent(spark, tmp_path):
     """stage_min_blocks=1 forces the entity-partitioned parquet spill path
     (the large-batch shape): final state must match the in-heap cache path
     exactly — including reorg delete+reinsert — and the spill dirs must be
-    gone once the run finishes."""
+    gone once the run finishes. Neither path may leave a cached frame in
+    the session once the run returns — reorg cycles included, whose
+    winner-filtered batch is a different frame from the cached one."""
     import os
 
     spec, wal = _wal(spark, tmp_path, reorg_blocks=(7, 8))
+    spark.catalog.clearCache()
     out = {}
     for tag, stage_min in (("cached", 10**9), ("staged", 1)):
         cfg = StreamerConfig(
@@ -155,6 +158,7 @@ def test_staged_batch_spill_equivalent(spark, tmp_path):
         )
         s = ChainStreamer(spark, cfg)
         s.run(WalTailer(wal, batch_size=cfg.batch_size))
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), tag
         out[tag] = s
 
     for name in ("blocks", "transactions", "logs", "token_transfers"):
@@ -165,3 +169,26 @@ def test_staged_batch_spill_equivalent(spark, tmp_path):
 
     staging_root = str(tmp_path / "wh_staged" / "_staging")
     assert not os.path.isdir(staging_root) or os.listdir(staging_root) == []
+
+
+def test_catchup_skip_commits_to_head_in_one_cycle(spark, tmp_path):
+    """``allow_catchup_skip``: a tailer far behind the WAL head jumps
+    straight to it — one cycle commits (wm, head] and no row is lost."""
+    spec, wal = _wal(spark, tmp_path)
+    head = wal.agg(F.max("seq")).first()[0]
+    cfg = StreamerConfig(warehouse=str(tmp_path / "wh"), batch_size=50, partition_size=10)
+    s = ChainStreamer(spark, cfg)
+    wm = s.run(WalTailer(wal, batch_size=cfg.batch_size), max_cycles=1)
+    assert head - wm > 1.5 * cfg.batch_size  # far enough behind to skip
+    n_before = len(s.lineage.entries())
+
+    s2 = ChainStreamer(spark, cfg)
+    tailer = WalTailer(wal, batch_size=cfg.batch_size)
+    assert s2.run(tailer, allow_catchup_skip=True) == head
+    batches = [e for e in s2.lineage.entries()[n_before:] if "lo" in e]
+    assert [(e["lo"], e["hi"]) for e in batches] == [(wm, head)]
+    assert s2.tables["blocks"].read().count() == 20
+    assert s2.tables["transactions"].read().count() == 20 * 3
+    assert s2.tables["receipts"].read().count() == 20 * 3
+    assert s2.tables["logs"].read().count() == 20 * 3 * 2
+    assert s2.tables["token_transfers"].read().count() == 20 * 3 * 2
